@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md: the physical-plan audit backing README.md's scale
@@ -376,9 +375,9 @@ object PlanDump {
          |An eager cache+count materialization was tried first and the
          |bench band-guard flagged it at 3.4x the prior band (1,068 ms vs
          |253 ms for this shape at sf0.1 — cache job overhead dominates at
-         |local scale); graft.dedup.semantic.materialize=true enables the
-         |single-corpus-pass pinned-assignment plan for scales where
-         |corpus passes dominate. The BroadcastNestedLoopJoin in this
+         |local scale), and a checkpointed map-only assignment feeding
+         |both arms measured 1.03-1.12x slower at sf0.1 (r22 section
+         |below). The BroadcastNestedLoopJoin in this
          |plan is the whitelisted <=16-row codebook broadcast, same as the
          |IVF queries.""").stripMargin,
     "q_similarity_pq" ->
@@ -491,13 +490,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned 8 cores, whatever SPARK_GRAFT_CPUS says: join strategies and
+    // partition counts in the fingerprinted plans must not vary by host
+    val spark = Session.local(8)
     val sb = new StringBuilder
     sb.append("# PLANS - physical-plan audit (generated by graft.PlanDump at sf0.01, local[8])\n\n")
     sb.append("Evidence for the scale claims in README.md: predicate pushdown,\n")

@@ -2,41 +2,27 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for a set of declared queries into a
-  * directory — the optimization-round evidence files
-  * (plans/rNN/<query>_{before,after}.txt). Usage:
+  * directory — before/after evidence files for a plan change
+  * (`<outDir>/<query>_<suffix>.txt`). Usage:
   *   runMain graft.PlanSnap <outDir> <suffix> [q1,q2,...]
-  * Defaults: sf dir from SPARK_GRAFT_SF_DIR (sf0.1), all queries when no
-  * list is given. Session config mirrors Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus) so the captured plans are the ones the
-  * bench actually runs, not PlanDump's local[8] audit shape.
+  * The sf dir comes from SPARK_GRAFT_SF_DIR (default sf0.1); all queries
+  * when no list is given. The session is Bench's ([[Session.local]]), so
+  * the captured plans are the ones the bench actually runs, not
+  * PlanDump's local[8] audit shape.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("plans/r21")
-    val suffix = args.lift(1).getOrElse("before")
+    require(args.length >= 2,
+      "usage: runMain graft.PlanSnap <outDir> <suffix> [q1,q2,...]")
+    val outDir = args(0)
+    val suffix = args(1)
     val names = args.lift(2).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_R21=0 / GRAFT_R22=0 capture the pre-optimization plan shape
-    // (graft.Opt); GRAFT_SCALE_CLUSTER=1 captures the deployment-scale
-    // shape (graft.Opt.cluster)
-    sys.env.get("GRAFT_R21").foreach(v => spark.conf.set("graft.r21", v))
-    sys.env.get("GRAFT_R22").foreach(v => spark.conf.set("graft.r22", v))
-    sys.env.get("GRAFT_SCALE_CLUSTER")
-      .foreach(v => spark.conf.set("graft.scale.cluster", v))
+    val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

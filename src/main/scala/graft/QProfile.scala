@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-clock profile of one declared query — optimization-round
   * measurement tooling (guide §1: find where the time goes before
@@ -16,15 +15,7 @@ object QProfile {
     val name = args.headOption.getOrElse("q_scan_parquet")
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     case class J(id: Int, start: Long, var end: Long = 0L, desc: String = "")
     val jobs = scala.collection.mutable.LinkedHashMap[Int, J]()
     val listener = new SparkListener {

@@ -1,35 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Correctness-gate marker (ADVICE r18 #1): queries with production
     // knobs whose DuckDB oracle hardcodes the default (e.g.
     // graft.media.phash.occcutoff) REFUSE a non-default setting when this
     // flag is up, so a stray conf can never silently desync the gate —
     // the run fails loudly instead of hash-mismatching.
     spark.conf.set("graft.gate", "true")
-    // A/B and deployment-shape verification (r22): the same env hooks as
-    // PlanSnap, so the oracle gate can run against the off-shapes
-    // (GRAFT_R21=0 / GRAFT_R22=0) and the cluster shapes
-    // (GRAFT_SCALE_CLUSTER=1) — "oracle green both ways" is the
-    // adjudication bar for every shape switch. Unset = driver defaults.
-    Seq("GRAFT_R21" -> "graft.r21", "GRAFT_R22" -> "graft.r22",
-        "GRAFT_SCALE_CLUSTER" -> "graft.scale.cluster").foreach {
-      case (env, key) => sys.env.get(env).foreach(spark.conf.set(key, _))
-    }
     new java.io.File(outDir).mkdirs()
     // comma-separated allowlist for single-query dumps (local iteration);
     // unset = all, which is what the driver runs

@@ -797,9 +797,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     keysOpt match {
       case None => delta.drop("__batch")
       case Some(keys)
-          if keys.nonEmpty && delta.columns.length > keys.length + 1 &&
-            graft.Opt.on(spark) =>
-        // r21: newest-per-key via max_by aggregation instead of a
+          if keys.nonEmpty && delta.columns.length > keys.length + 1 =>
+        // newest-per-key via max_by aggregation instead of a
         // row_number window. The win is PARTIAL (map-side) aggregation:
         // same-key delta rows collapse before the exchange, so the
         // shuffle carries ~one row per key instead of one per delta —
@@ -823,9 +822,10 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
             if (keys.contains(c)) col(c)
             else col("__top").getField(c).as(c)): _*)
       case Some(keys) =>
-        // global aggregates (no keys) merge under a single partition — the
-        // delta there is one row per trigger, so the unpartitioned window
-        // is a handful of rows, not a scale hazard.
+        // only global (no keys) and payload-less views reach the window.
+        // Global aggregates merge under a single partition — the delta
+        // there is one row per trigger, so the unpartitioned window is a
+        // handful of rows, not a scale hazard.
         val w = if (keys.isEmpty) Window.orderBy(col("__batch").desc)
                 else Window.partitionBy(keys.map(col): _*).orderBy(col("__batch").desc)
         delta.withColumn("__rn", row_number().over(w))
@@ -864,7 +864,8 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
     * highest batch id so future deltas still win the merge). ONLINE: safe
     * while the view's query runs — appends serialize on the per-view
     * lock, readers keep the one-version grace window. */
-  def compactViewTable(name: String, targetPartitions: Int = 8): Unit =
+  def compactViewTable(name: String,
+                       targetPartitions: Int = KinesisEngine.ViewFiles): Unit =
     viewLock(name).synchronized {
       val curDir = viewDeltaDir(name)
       if (!Files.exists(Paths.get(curDir))) return // nothing materialized yet
@@ -1451,32 +1452,22 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
               .outputMode(if (keysOpt.isDefined) "update" else "append")
               .foreachBatch { (batch: DataFrame, batchId: Long) =>
                 val stamped = (gen << 40) | batchId
-                // r21 (guide §6 small files): an update-mode batch keeps
+                // Small files (guide §6): an update-mode batch keeps
                 // the state-store partitioning (spark.sql.shuffle.
                 // partitions), so a touched-groups-sized delta would land
                 // as cores× sliver files PER TRIGGER and the merge read
                 // pays a footer+task per sliver until compaction. Pack
-                // the write into at most graft.view.delta.files tasks
-                // (default 8 — compactViewTable's targetPartitions);
-                // coalesce is narrow, so state partitions keep their ids
-                // and no shuffle is added. Raise the knob when a single
-                // trigger legitimately touches huge group counts.
-                // r22 (ADVICE r21 #1): computed lazily so append-mode
-                // views (keysOpt None, `packed` never used) don't force
+                // the write into at most KinesisEngine.ViewFiles tasks
+                // (compactViewTable's file count too); coalesce is
+                // narrow, so state partitions keep their ids and no
+                // shuffle is added. Computed lazily so append-mode views
+                // (keysOpt None, `packed` never used) don't force
                 // physical planning of the micro-batch via rdd access on
-                // every trigger; the knob parse is clamped/safe so a
-                // malformed session value degrades to the default
-                // instead of failing the stream mid-trigger.
-                lazy val packed = {
-                  val deltaFiles = math.max(1,
-                    scala.util.Try(spark.conf
-                      .get("graft.view.delta.files", "8").trim.toInt)
-                      .getOrElse(8))
-                  if (graft.Opt.on(spark) &&
-                      batch.rdd.getNumPartitions > deltaFiles)
-                    batch.coalesce(deltaFiles)
+                // every trigger.
+                lazy val packed =
+                  if (batch.rdd.getNumPartitions > KinesisEngine.ViewFiles)
+                    batch.coalesce(KinesisEngine.ViewFiles)
                   else batch
-                }
                 viewLock(vname).synchronized {
                   if (keysOpt.isDefined)
                     packed.withColumn("__batch", lit(stamped))
@@ -2070,6 +2061,11 @@ class KinesisEngine(spark: SparkSession, metaDir: String,
   * companion and are property-testable without a SparkSession
   * (PropertySpec). */
 object KinesisEngine {
+  /** Files per view write: the most a trigger's merge-mode delta is
+    * coalesced to, and the file count [[KinesisEngine#compactViewTable]]
+    * folds a view's snapshot into. */
+  val ViewFiles = 8
+
   /** PipelineDB parity for CV DDL: `count(DISTINCT x)` in a continuous
     * view is HLL-approximate BY DESIGN in PipelineDB (fixed-size per-group
     * state), and Spark streaming rejects exact distinct aggregation

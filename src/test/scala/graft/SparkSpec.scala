@@ -4,18 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (sbt runs suites sequentially in the
-  * forked test JVM; getOrCreate reuses one session). */
+  * forked test JVM; getOrCreate reuses one session). Pinned to 4 cores so
+  * the suites run the same partitioning on every host. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4, Map(
+    "spark.sql.warehouse.dir" ->
+      s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse"))
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
